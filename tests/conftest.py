@@ -1,5 +1,15 @@
 import pytest
+from hypothesis import settings
 from pyspark.sql import SparkSession
+
+# Every Hypothesis test draws the same examples on every run (seeded from
+# the test's own source), so suite outcomes never depend on which examples
+# happen to be drawn. Loaded here, before the test modules' @settings
+# decorators run; Hypothesis's --hypothesis-profile flag still overrides
+# it. To explore with fresh draws, load Hypothesis's own default profile:
+#   pytest tests/ --hypothesis-profile=default [--hypothesis-seed=N]
+settings.register_profile("derandomized", derandomize=True)
+settings.load_profile("derandomized")
 
 
 @pytest.fixture(scope="session")
