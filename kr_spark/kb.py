@@ -7,6 +7,12 @@ Sesame Sail; triples are row objects added one at a time
 with the FIXTURES.md §B schema; `add` batches rows driver-side and dedups with
 a single left-anti join per flush — no per-row round trips.
 
+A KB is a base DataFrame (what it was opened on: a store snapshot, a given
+frame, or nothing) plus the rows added since, kept as their own small
+checkpointed frame. `save` hands the store only those rows when the KB still
+matches the store's current snapshot, like a Delta Lake commit that writes
+only new files (PAPERS.md "Delta Lake").
+
 Scale notes (100 TB design): the in-memory `_df` path is for tests and small
 fixtures; production materialization goes through kr_spark.sources.store
 (pred-bucket partitioned parquet/Iceberg). All dedup is a single shuffle on
@@ -17,6 +23,8 @@ fixpoint loops (kr_spark.plans.fixpoint), not here.
 
 from __future__ import annotations
 
+import os
+import threading
 from decimal import Decimal
 from typing import Iterable, Iterator
 
@@ -102,6 +110,11 @@ def _box_agg_columns(df: DataFrame, aliases: set) -> DataFrame:
     return df.select(*cols)
 
 
+def _snapshot_key(store) -> tuple:
+    """Identity of the store snapshot a handle is at: path, layout, id."""
+    return (os.path.abspath(store.path), store.pred_buckets, store.snapshot)
+
+
 def triple_row(
     s: Term,
     p: Term,
@@ -142,9 +155,20 @@ class KB:
     ) -> None:
         self.spark = spark
         self.ns = ns if ns is not None else NamespaceRegistry()
-        self._df = df if df is not None else spark.createDataFrame([], TRIPLE_SCHEMA)
+        # base: a set of triples (a store snapshot, a caller's frame, or empty)
+        self._base = df if df is not None else spark.createDataFrame([], TRIPLE_SCHEMA)
+        # rows added since the base, localCheckpointed; None when there are none
+        self._added: DataFrame | None = None
+        # True while the added or pending rows may hold add_unchecked duplicates
+        self._unchecked = False
+        # (path, pred_buckets, snapshot id) of the store snapshot the base
+        # is a subset of; None when the base came from no store
+        self._stored_at: tuple | None = None
         self._pending: list[Row] = []
         self._pending_unchecked: list[Row] = []
+        # one flush at a time: concurrent readers (pmap_query) must not see
+        # the pending rows taken but not yet added
+        self._flush_lock = threading.Lock()
         self.use_default_language = use_default_language
         self.default_language = default_language
         # default graph for adds, like kr's dynamic *graph* (rdf.clj:20)
@@ -207,6 +231,7 @@ class KB:
         self._pending_unchecked.append(
             triple_row(self.term(s), self.term(p), self.term(o), g)
         )
+        self._unchecked = True
         if g is not None and self.force_add_named_to_default:
             self._pending_unchecked.append(
                 triple_row(self.term(s), self.term(p), self.term(o), None)
@@ -214,9 +239,14 @@ class KB:
 
     def compact(self) -> None:
         """Dedup unchecked appends — restores set semantics (M2's deferred
-        half of checked-add; at scale this is the background table rewrite)."""
+        half of checked-add; at scale this is the background table rewrite).
+        Only the added rows can repeat: the base is a set."""
         self.flush()
-        self._df = self._df.dropDuplicates(TRIPLE_KEY).localCheckpoint()
+        if self._unchecked:
+            self._added = anti_join_null_safe(
+                self._added.dropDuplicates(TRIPLE_KEY), self._base, TRIPLE_KEY
+            ).localCheckpoint()
+            self._unchecked = False
 
     def add_statements(self, triples: Iterable[tuple]) -> None:
         """Batch insert (M3, rdf.clj:78)."""
@@ -227,26 +257,38 @@ class KB:
         """Append a DataFrame already in TRIPLE_SCHEMA, with set-semantics dedup."""
         self.flush()
         new = df.select(*TRIPLE_SCHEMA.fieldNames())
+        # the predicates of `df` are not known on the driver: unpruned probe
         fresh = anti_join_null_safe(new, self._df, TRIPLE_KEY)
-        # localCheckpoint: truncate the union/anti-join lineage so query plans
-        # against a mutated KB stay shallow (same role as the fixpoint loop's
-        # per-iteration checkpoint; at scale this is the Iceberg table commit)
-        self._df = self._df.unionByName(
-            fresh.dropDuplicates(TRIPLE_KEY)
-        ).localCheckpoint()
+        self._append(fresh.dropDuplicates(TRIPLE_KEY))
 
     def flush(self) -> None:
-        if self._pending:
-            batch = self.spark.createDataFrame(
-                self._pending, TRIPLE_SCHEMA
-            ).dropDuplicates(TRIPLE_KEY)
-            self._pending = []
-            fresh = anti_join_null_safe(batch, self._df, TRIPLE_KEY)
-            self._df = self._df.unionByName(fresh).localCheckpoint()
-        if self._pending_unchecked:
-            batch = self.spark.createDataFrame(self._pending_unchecked, TRIPLE_SCHEMA)
-            self._pending_unchecked = []
-            self._df = self._df.unionByName(batch).localCheckpoint()
+        with self._flush_lock:
+            if self._pending:
+                rows, self._pending = self._pending, []
+                batch = self.spark.createDataFrame(rows, TRIPLE_SCHEMA).dropDuplicates(
+                    TRIPLE_KEY
+                )
+                # set semantics probes only the triples of the batch's predicates
+                preds = sorted({r.p for r in rows})
+                existing = self._df.filter(F.col("p").isin(*preds))
+                self._append(anti_join_null_safe(batch, existing, TRIPLE_KEY))
+            if self._pending_unchecked:
+                rows, self._pending_unchecked = self._pending_unchecked, []
+                self._append(self.spark.createDataFrame(rows, TRIPLE_SCHEMA))
+
+    def _append(self, fresh: DataFrame) -> None:
+        # localCheckpoint the added rows only: query plans against a mutated
+        # KB stay shallow (the fixpoint loop's per-iteration checkpoint role)
+        # and the base is never copied
+        added = fresh if self._added is None else self._added.unionByName(fresh)
+        self._added = added.localCheckpoint()
+
+    @property
+    def _df(self) -> DataFrame:
+        """The KB's triples, pending rows excluded."""
+        if self._added is None:
+            return self._base
+        return self._base.unionByName(self._added)
 
     def df(self) -> DataFrame:
         self.flush()
@@ -627,25 +669,41 @@ class KB:
 
     # ---- persistence (S1 open/close lifecycle against the store seam) ----
 
-    def save(self, path: str, pred_buckets: int = 16) -> None:
+    def save(self, path: str, pred_buckets: int | None = None) -> None:
         """Persist the KB to a pred-bucketed triple store (sources/store.py;
-        Iceberg layout, parquet fallback). Set semantics preserved via the
-        store's idempotent append."""
+        Iceberg layout, parquet fallback) through the store's one writer,
+        `append_idempotent`, which keeps set semantics.
+
+        When the KB still matches the store's current snapshot (same path,
+        layout and snapshot id as its last load or save) only the rows
+        added since are handed over; otherwise the whole KB is. Unchecked
+        adds are compacted first. `pred_buckets=None` takes an existing
+        store's layout from its manifest (16 for a new store)."""
         from kr_spark.sources.store import open_store
 
         store = open_store(self.spark, path, pred_buckets)
-        if store.exists():
-            store.append_idempotent(self.df())
-        else:
-            store.overwrite(self.df())
+        if self._unchecked:
+            self.compact()
+        rows = self.df()
+        if self._stored_at == _snapshot_key(store):
+            # nothing added: an empty frame the optimizer folds to a local
+            # relation, so the store sees no rows without running a job
+            rows = self._added if self._added is not None else rows.limit(0)
+        store.append_idempotent(rows)
+        self._base, self._added = self._df, None
+        self._stored_at = _snapshot_key(store)
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str, pred_buckets: int = 16) -> "KB":
-        """Open a persisted KB (kb constructor S1 role for a durable store)."""
+    def load(cls, spark: SparkSession, path: str, pred_buckets: int | None = None) -> "KB":
+        """Open a persisted KB (kb constructor S1 role for a durable store).
+        The KB records the snapshot it was opened at, read before the data
+        so a concurrent write can only make it look older."""
         from kr_spark.sources.store import open_store
 
         store = open_store(spark, path, pred_buckets)
-        return cls(spark, df=store.read())
+        kb = cls(spark, df=store.read())
+        kb._stored_at = _snapshot_key(store)
+        return kb
 
     # ---- raw SPARQL string entry points (Q9, sparql.clj:560-603) ----
 

@@ -33,7 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_PRED_BUCKETS = 16
+from kr_spark.sources.store import DEFAULT_PRED_BUCKETS
 
 
 def _manifest_dir(out_dir: str) -> str:
